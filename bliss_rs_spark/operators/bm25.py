@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
 from bliss_rs_spark.functions.tokenizer import term_counts
+from bliss_rs_spark.lru import LRU
 
 
 def query_terms(query_text: str, lang: str | None = None, cfg: IndexConfig | None = None) -> list[str]:
@@ -33,16 +34,14 @@ def query_terms(query_text: str, lang: str | None = None, cfg: IndexConfig | Non
     return sorted(term_counts(query_text, lang, cfg.lang_tagging).keys())
 
 
-from collections import OrderedDict
-
-_BUCKET_MEMO: OrderedDict[tuple[str, int], int] = OrderedDict()
-_BUCKET_MEMO_MAX = 262_144
+_BUCKET_MEMO = LRU(262_144)
 
 
 def jvm_hash_buckets(
     spark: SparkSession, values: list[str], n_buckets: int
 ) -> list[int]:
-    """pmod(xxhash64(v), n_buckets) per distinct value, memoized (true LRU).
+    """pmod(xxhash64(v), n_buckets) per distinct value, memoized (bounded
+    LRU, bliss_rs_spark/lru.py).
 
     Spark's xxhash64 has no public Python twin, so unseen values cost one
     tiny local-relation job — but a warm process re-probing the same query
@@ -50,26 +49,20 @@ def jvm_hash_buckets(
     ZERO jobs (guide §1.2: the probe was one scheduling round-trip per
     query).  The memo is value-keyed, bounded, and content-independent (a
     pure hash), so this is not result caching."""
-    missing = sorted({v for v in values if (v, n_buckets) not in _BUCKET_MEMO})
-    if missing:
+
+    def probe(missing: list[tuple[str, int]]) -> dict:
         rows = (
-            spark.createDataFrame([(v,) for v in missing], "v string")
+            spark.createDataFrame([(v,) for v, _ in sorted(missing)], "v string")
             .select(
                 "v",
                 F.pmod(F.xxhash64("v"), F.lit(n_buckets)).cast("int").alias("b"),
             )
             .collect()
         )
-        for r in rows:
-            _BUCKET_MEMO[(r["v"], n_buckets)] = int(r["b"])
-    out = set()
-    for v in values:
-        key = (v, n_buckets)
-        _BUCKET_MEMO.move_to_end(key)
-        out.add(_BUCKET_MEMO[key])
-    while len(_BUCKET_MEMO) > _BUCKET_MEMO_MAX:
-        _BUCKET_MEMO.popitem(last=False)
-    return sorted(out)
+        return {(r["v"], n_buckets): int(r["b"]) for r in rows}
+
+    got = _BUCKET_MEMO.get_or_load([(v, n_buckets) for v in values], probe)
+    return sorted(set(got.values()))
 
 
 def term_buckets(spark: SparkSession, terms: list[str], cfg: IndexConfig) -> list[int]:

@@ -2663,7 +2663,7 @@ ORDER BY n_docs DESC, d.lang ASC
 
 def q_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k restricted to lang='de' docs via the per-(unit, shard)
-    allow-set path (operators/wand.py:_allow_sets_df) — Lucene filter
+    allow-set path (operators/unit_server.py:_id_sets_df) — Lucene filter
     semantics: corpus stats unchanged, candidates constrained."""
     from bliss_rs_spark.operators.pack import build_packed_index_full
     from bliss_rs_spark.operators.wand import wand_topk_units

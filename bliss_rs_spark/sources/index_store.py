@@ -153,7 +153,7 @@ def dir_fingerprint(d: str) -> tuple:
     data files only (_SUCCESS markers and .crc sidecars are regenerated per
     write and carry no content).  Hard links preserve inodes, so a carried
     partition fingerprints identically across snapshots — the reuse test
-    behind WandServer.refresh() and PhraseServer.refresh()."""
+    behind the warm servers' refresh() (operators/unit_server.py)."""
     out = []
     if os.path.isdir(d):
         for root, _, files in os.walk(d):
@@ -392,8 +392,8 @@ class IndexStore:
     def tombstone_frame(self, spark: SparkSession) -> DataFrame | None:
         """The (doc_id, before_seq) tombstones frame, NEVER collected — this
         is what query paths hand to the WAND kernels, which turn it into
-        per-(unit, shard) dead sets distributed (operators/wand.py:
-        _dead_sets_df).  None for layout-1 stores (no tombstones on disk)."""
+        per-(unit, shard) dead sets distributed (operators/unit_server.py:
+        _id_sets_df).  None for layout-1 stores (no tombstones on disk)."""
         if "segments" not in self.meta():
             return None
         return self.load(spark, "tombstones")

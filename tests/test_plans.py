@@ -118,33 +118,39 @@ def test_phrase_server_plan_is_shuffle_free(spark):
 
 
 def test_serving_plan_exchange_free_under_churn(spark, tmp_path):
-    """Round 5: with tombstones in play, BOTH servers' per-query plans must
-    still contain NO Exchange of any kind (dead sets ride in as a broadcast
-    VARIABLE, not a per-query broadcast JOIN — the join re-collected and
-    re-shipped the dead frame on every query)."""
+    """Round 5: with tombstones in play, every warm server's per-query plan
+    must still contain NO Exchange of any kind (dead sets ride in as a
+    broadcast VARIABLE, not a per-query broadcast JOIN — the join
+    re-collected and re-shipped the dead frame on every query)."""
     from dataclasses import replace
 
     from bliss_rs_spark.operators.phrase import PhraseServer
+    from bliss_rs_spark.operators.trigram import TrigramServer, trigrams_of
     from bliss_rs_spark.operators.wand import WandServer
     from bliss_rs_spark.plans.lifecycle import build_full, update_index
 
-    cfg = replace(CFG, store_positions=True)
+    cfg = replace(CFG, store_positions=True, store_trigrams=True)
     s = IndexStore(str(tmp_path / "idx"))
     docs = with_invariants(synth_documents(spark, 150, seed=42))
     build_full(spark, docs, s, cfg, checkpoint=False)
+    live = docs.filter(F.col("doc_id") % 6 != 0)
     update_index(
-        spark, docs.filter(F.col("doc_id") % 6 != 0), s, None,
+        spark, live, s, None,
         delete_missing=True, repack="segment", auto_maintain=False,
     )
 
     w = WandServer.from_store(spark, s)
     p = PhraseServer.from_store(spark, s)
+    t = TrigramServer.from_store(spark, s, live)
     try:
         assert w._dead_bc is not None and p._dead_bc is not None
+        assert t._dead_bc is not None
         for df in (
-            w._serving_plan(["varbyte", "merge"]),
+            w._scan(["varbyte", "merge"]),
             p._scan(["fast", "merge"]),
             p._plan_for("fast merge", 10),
+            t._scan(trigrams_of("merge")),
+            t.candidates_df("merge"),
         ):
             plan = _explain(df)
             query_side = plan.split("InMemoryRelation")[0]
@@ -153,3 +159,4 @@ def test_serving_plan_exchange_free_under_churn(spark, tmp_path):
     finally:
         w.close()
         p.close()
+        t.close()

@@ -4,7 +4,7 @@ tombstone count (VERDICT r3 "what's missing" #2).
 The reference applies deletes inside the query engine itself
 (/root/reference/src/library.rs:1695-1749); the Spark analogue is the
 per-(unit, shard) dead-set frame cogrouped with the blocks it masks
-(operators/wand.py:_dead_sets_df).  These tests prove:
+(operators/unit_server.py:_id_sets_df).  These tests prove:
 
 1. the production paths (query_index / query_index_batch) never collect the
    tombstones frame — IndexStore.tombstone_dict is monkeypatched to raise,

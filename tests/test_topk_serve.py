@@ -457,33 +457,84 @@ def test_wand_server_refresh_after_compaction_rebuilds(spark, tmp_path):
         server.close()
 
 
-def test_wand_server_refresh_noop_and_cost_shape(spark, tmp_path):
-    """Round-5 refresh cost model: an unchanged snapshot short-circuits
-    (all units reused, idf table object untouched, no audit), and after a
-    real delta only the rebuilt unit is audited (reused verdicts are
-    memoized)."""
+def _jobs_started_by(spark, fn):
+    """(fn(), ids of the Spark jobs fn started) — counted through a
+    dedicated job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "jobs-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _open_warm_servers(spark, store, docs):
+    """One of each warm server over ``store`` (all share the UnitServer
+    lifecycle)."""
+    from bliss_rs_spark.operators.phrase import PhraseServer
+    from bliss_rs_spark.operators.trigram import TrigramServer
     from bliss_rs_spark.operators.wand import WandServer
+
+    return {
+        "wand": WandServer.from_store(spark, store),
+        "phrase": PhraseServer.from_store(spark, store),
+        "trigram": TrigramServer.from_store(spark, store, docs),
+    }
+
+
+def _ask(kind, srv, needle):
+    return srv.grep(needle) if kind == "trigram" else srv.query(needle, 10)
+
+
+def test_wand_server_refresh_noop_and_cost_shape(spark, tmp_path):
+    """Round-5 refresh cost model, for every warm server (Wand, Phrase,
+    Trigram): an unchanged snapshot short-circuits — all units reused and
+    ZERO Spark jobs, with tombstones in play (Wand: idf table object
+    untouched, no audit) — and after a real delta only the rebuilt unit is
+    warmed (Wand: reused audit verdicts are memoized)."""
     from bliss_rs_spark.plans.lifecycle import build_full, update_index
     from bliss_rs_spark.sources.index_store import IndexStore
 
-    cfg = IndexConfig(block_size=16, n_doc_shards=4, n_term_buckets=8)
+    cfg = IndexConfig(block_size=16, n_doc_shards=4, n_term_buckets=8,
+                      store_positions=True, store_trigrams=True)
     store = IndexStore(str(tmp_path / "idx"))
     docs = with_invariants(synth_documents(spark, 120, seed=5))
     build_full(spark, docs, store, cfg, checkpoint=False)
-    server = WandServer.from_store(spark, store)
+    live = docs.filter(F.col("doc_id") % 11 != 0)
+    update_index(spark, live, store, None, delete_missing=True,
+                 repack="segment", auto_maintain=False)
+    assert store.has_tombstones(spark)
+    servers = _open_warm_servers(spark, store, live)
     try:
+        server = servers["wand"]
         ts_obj = server._ts
-        ok_before = dict(server._unit_ok)
-        info = server.refresh(store)
-        assert info["rebuilt_units"] == []
-        assert sorted(info["reused_units"]) == sorted(server._unit_frames)
+        ok_before = dict(server._unit_info)
+        for kind, srv in servers.items():
+            assert srv._dead_bc is not None, kind
+            info, jobs = _jobs_started_by(spark, lambda: srv.refresh(store))
+            assert info["rebuilt_units"] == [], kind
+            assert sorted(info["reused_units"]) == sorted(srv._unit_frames), kind
+            assert jobs == [], (kind, jobs)
         assert server._ts is ts_obj  # idf table untouched: no re-persist
-        assert server._unit_ok == ok_before
+        assert server._unit_info == ok_before
+
+        # a no-op trigram refresh still re-points the verify frame
+        tri = servers["trigram"]
+        evens = live.filter(F.col("doc_id") % 2 == 0)
+        info = tri.refresh(store, docs=evens)
+        assert info["rebuilt_units"] == []
+        got = tri.grep("return")
+        assert got and all(d % 2 == 0 for d in got)
 
         # real delta: decision stays pinned (no vocab re-count path), the
         # reused base keeps its memoized audit verdict
         docs_b = with_invariants(
-            docs.withColumn(
+            live.withColumn(
                 "content",
                 F.when(F.col("doc_id") % 13 == 0,
                        F.concat(F.col("content"), F.lit("\nzz_n5 zz_n5")))
@@ -493,38 +544,46 @@ def test_wand_server_refresh_noop_and_cost_shape(spark, tmp_path):
         update_index(spark, docs_b, store, None, repack="segment",
                      auto_maintain=False)
         decision = server._driver_idf
-        info2 = server.refresh(store)
-        assert info2["reused_units"] and info2["rebuilt_units"]
+        for kind, srv in servers.items():
+            kw = {"docs": docs_b} if kind == "trigram" else {}
+            info2 = srv.refresh(store, **kw)
+            assert info2["reused_units"] and info2["rebuilt_units"], kind
         assert server._driver_idf == decision
         assert server._ts is not ts_obj  # term_stats changed -> rebuilt
         assert server.single_stage
-        got = server.query("zz_n5", 10)
-        fresh = WandServer.from_store(spark, store)
+        fresh = _open_warm_servers(spark, store, docs_b)
         try:
-            assert got == fresh.query("zz_n5", 10)
+            for kind, srv in servers.items():
+                got = _ask(kind, srv, "zz_n5 zz_n5")
+                assert got, kind  # non-vacuous
+                assert got == _ask(kind, fresh[kind], "zz_n5 zz_n5"), kind
         finally:
-            fresh.close()
+            for f in fresh.values():
+                f.close()
     finally:
-        server.close()
+        for srv in servers.values():
+            srv.close()
 
 
 def test_gc_respects_live_server_pins(spark, tmp_path):
     """gc() must not expire a snapshot a warm server's reused frames still
-    read (round-5 ADVICE medium): the pinned base snapshot survives
-    gc(keep_last=1), a forced cache eviction recomputes from the still-live
-    paths, and close() releases the pin so a later gc() collects it."""
+    read (round-5 ADVICE medium), for every warm server: after two segment
+    updates, gc(keep_last=1) leaves every pinned snapshot on disk (Wand's
+    base unit still reads snap0), a forced cache eviction recomputes from
+    the still-live paths, and close() releases every pin so a later gc()
+    collects snap0."""
     import os
 
-    from bliss_rs_spark.operators.wand import WandServer
     from bliss_rs_spark.plans.lifecycle import build_full, update_index
     from bliss_rs_spark.sources.index_store import IndexStore
 
-    cfg = IndexConfig(block_size=16, n_doc_shards=4, n_term_buckets=8)
+    cfg = IndexConfig(block_size=16, n_doc_shards=4, n_term_buckets=8,
+                      store_positions=True, store_trigrams=True)
     store = IndexStore(str(tmp_path / "idx"))
     docs = with_invariants(synth_documents(spark, 120, seed=9))
     build_full(spark, docs, store, cfg, checkpoint=False)
     snap0 = store.current_snapshot()
-    server = WandServer.from_store(spark, store)
+    servers = _open_warm_servers(spark, store, docs)
     try:
         # two delta updates so snap0 leaves the keep_last=1 window
         for mod in (17, 23):
@@ -538,23 +597,33 @@ def test_gc_respects_live_server_pins(spark, tmp_path):
             )
             update_index(spark, delta, store, None, repack="segment",
                          auto_maintain=False)
-            server.refresh(store)
+            for kind, srv in servers.items():
+                srv.refresh(store, **({"docs": delta} if kind == "trigram" else {}))
+        server = servers["wand"]
         base_seq = min(server._unit_frames)
         assert server._unit_snaps[base_seq] == snap0  # base still reads snap0
+        pinned = store.pinned_snapshots()
+        assert snap0 in pinned and store.current_snapshot() in pinned
 
         removed = store.gc(keep_last=1)
         assert snap0 not in {r for r in removed}
-        assert os.path.isdir(os.path.join(store.path, snap0))
+        for snap in pinned:
+            assert os.path.isdir(os.path.join(store.path, snap)), snap
 
-        # forced eviction: recompute must re-read snap0's (live) files
-        before = server.query("varbyte merge return", 10)
-        server._unit_frames[base_seq].unpersist(True)
-        server._unit_frames[base_seq].persist().count()
-        assert server.query("varbyte merge return", 10) == before
+        # forced eviction: recompute must re-read each unit's (live) files
+        for kind, srv in servers.items():
+            needle = "varbyte merge return" if kind == "wand" else "return"
+            before = _ask(kind, srv, needle)
+            assert before, kind
+            for f in srv._unit_frames.values():
+                f.unpersist(True)
+                f.persist().count()
+            assert _ask(kind, srv, needle) == before, kind
     finally:
-        server.close()
+        for srv in servers.values():
+            srv.close()
 
-    # pin released -> collectable
+    # pins released -> collectable
     assert store.pinned_snapshots() == set()
     removed2 = store.gc(keep_last=1)
     assert snap0 in removed2
